@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Round-15 deliverable helper: write `.explain("formatted")` output for
@@ -10,7 +9,8 @@ import java.nio.file.{Files, Paths}
   *   e.g. runMain graft.PlanDump r15 before x226_outer_join_replay
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1 — plans are captured at the
   * benched SF so Exchange/scan shapes match what Bench times),
-  * SPARK_GRAFT_CPUS (default 4).
+  * SPARK_GRAFT_CPUS (default 4, read by `core.Session.local`); any other
+  * Spark key (the AQE ones included) as a `-Dspark.*` JVM property.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -31,14 +31,7 @@ object PlanDump {
       sys.exit(2)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Tuning.adaptive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)
     for (name <- names) {

@@ -73,12 +73,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Tuning.adaptive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local("32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tenDir = sys.env.getOrElse("GRAFT_PROBE_10X", "/tmp/probe10x_r9")
     val hundredDir = sys.env.getOrElse("GRAFT_PROBE_100X", "/tmp/probe100x_r9")

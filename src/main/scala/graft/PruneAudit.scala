@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot harness-honesty audit (round-13; the x348 lesson): the bench
   * metric is `count()`, and Catalyst may legally ELIMINATE subtrees a
   * count cannot observe — a cardinality-preserving left join against a
@@ -26,11 +24,7 @@ object PruneAudit {
       n.nodeName.contains("Aggregate") => 1 }.sum
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local("8")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     def score(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
       census(p)

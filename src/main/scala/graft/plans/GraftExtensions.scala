@@ -5,13 +5,21 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionE
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Engine extension point: registers graft's native Catalyst expressions.
+/** Engine extension point: registers graft's native Catalyst expressions,
+  * the TopKPerKey strategy, the window→top-k rewrite rule and (injection
+  * path only) the DEDUP parser.
   *
-  * Two activation paths:
-  *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session build
-  *    (the standard SparkSessionExtensions mechanism), or
-  *  - `GraftExtensions.register(spark)` on a live session (used by the
-  *    declared queries, since the driver owns session construction).
+  * Which path registers for which session:
+  *  - sessions graft builds: `core.Session.local` calls `register` once,
+  *    as the session is created (every main and the test JVM);
+  *  - sessions graft does not build (an external caller's, such as a
+  *    benchmark harness's): every `SparkEntry.queries` function calls
+  *    `register` on the session it is given, before the query body runs;
+  *  - `spark.newSession()` inherits no runtime registration, so a query
+  *    that builds one registers on it itself (x149);
+  *  - `spark.sql.extensions=graft.plans.GraftExtensions` (or
+  *    `builder().withExtensions`) injects everything, the parser included,
+  *    into a session that is not yet built.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {

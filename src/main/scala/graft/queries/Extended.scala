@@ -294,7 +294,6 @@ object ExtendedQueries {
     * the top-10 cut is identical in both engines.
     */
   def x11CosineTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val emb = Io.table(spark, sfDir, "embeddings")
     // The query-vector norm is a constant: compute it ONCE on the broadcast
     // side instead of re-deriving it for every scanned row (O(d) per row).

@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup costs seconds; per-suite sessions would dominate test time.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Session.local("4")
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -18,17 +18,20 @@ class QualitySpec extends SparkSpec {
     "receiving_address", "location_region", "risk_score")
 
   test("profile counts nulls per column and rule violations with double-counting") {
-    val m = Quality.profile(full, "t")
-    assert(m.totalRows == 3)
-    assert(m.nulls == Map(
-      "timestamp" -> 1L, "transaction_type" -> 1L, "amount" -> 1L,
-      "receiving_address" -> 1L, "location_region" -> 1L, "risk_score" -> 1L))
-    assert(m.ruleViolations == Map(
-      "timestamp_not_null" -> 1L, "transaction_type_not_null" -> 1L,
-      "amount_not_null" -> 1L, "amount_non_negative" -> 1L))
-    // a row breaking k rules counts k times: 4 fails over 3 rows
-    assert(m.failedRowsEstimate == 4)
-    assert(math.abs(m.conformityRate - math.max(0.0, 1.0 - 4 / (3 + 1e-9))) < 1e-12)
+    // the repartitioned input merges partial counts across partitions
+    for (df <- Seq(full, full.repartition(3))) {
+      val m = Quality.profile(df, "t")
+      assert(m.totalRows == 3)
+      assert(m.nulls == Map(
+        "timestamp" -> 1L, "transaction_type" -> 1L, "amount" -> 1L,
+        "receiving_address" -> 1L, "location_region" -> 1L, "risk_score" -> 1L))
+      assert(m.ruleViolations == Map(
+        "timestamp_not_null" -> 1L, "transaction_type_not_null" -> 1L,
+        "amount_not_null" -> 1L, "amount_non_negative" -> 1L))
+      // a row breaking k rules counts k times: 4 fails over 3 rows
+      assert(m.failedRowsEstimate == 4)
+      assert(math.abs(m.conformityRate - math.max(0.0, 1.0 - 4 / (3 + 1e-9))) < 1e-12)
+    }
   }
 
   test("conformity floors at 0 when fails exceed rows") {

@@ -150,7 +150,6 @@ class GraftSqlParserSpec extends SparkSpec {
   test("the rewrite composes with the TopKRewrite optimizer face") {
     val df = fixture
     df.createOrReplaceTempView("gsp_docs")
-    GraftExtensions.register(spark)
     val prior = spark.conf.getOption("spark.graft.topk.rewrite")
     spark.conf.set("spark.graft.topk.rewrite", "true")
     try {

@@ -24,7 +24,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   private def withFlag[T](on: Boolean)(f: => T): T = {
-    GraftExtensions.register(spark)
     val key = "spark.graft.topk.rewrite"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, on.toString)
