@@ -12,11 +12,41 @@ import org.apache.spark.sql.functions._
   *
   * The driver program IS the orchestration (no Prefect analog needed): plain
   * function composition, with the gates' publish-before-throw ordering
-  * preserved. All transforms are lazy DataFrames; jobs trigger only at the
-  * same five points the reference materializes (two DQ profiles, the
-  * epoch-unit median, and the writes).
+  * preserved. All transforms are lazy DataFrames, and `run` materializes
+  * each stage once:
+  *
+  *   - ingest: CSV schema inference.
+  *   - dq_pre: ONE aggregate over the raw frame, which also decides the
+  *     timestamp rule (numeric-looking + epoch unit, [[Timestamps.ruleAggs]])
+  *     for the raw column that normalizes to `timestamp`.
+  *   - clean: launches nothing when dq_pre decided the timestamp rule (one
+  *     job otherwise); it builds the cleaned frame lazily and caches it.
+  *   - dq_post: the post-clean aggregate builds that cache, so clean's work
+  *     (scan, standardize, dedup) lands inside dq_post.
+  *   - publish: every write reads the cached cleaned frame; the region and
+  *     last-sale frames, each written twice, are cached on first write.
+  *
+  * Every cache is released on every exit path, gate throws and failed
+  * writes included. [[Result.stages]] carries per-stage wall time and row
+  * counts read off the two profiles (no extra Spark action).
   */
 object Pipeline {
+
+  /** One stage's wall time and the row counts the profiles already know;
+    * `None` where the stage has no such figure.
+    */
+  final case class StageMetrics(
+      stage: String,
+      wallMs: Long,
+      rowsIn: Option[Long],
+      rowsOut: Option[Long],
+      conformity: Option[Double]) {
+    def toJson: String = {
+      def opt(v: Option[Any]) = v.fold("null")(_.toString)
+      s"""{"stage": "$stage", "wall_ms": $wallMs, "rows_in": ${opt(rowsIn)}, """ +
+        s""""rows_out": ${opt(rowsOut)}, "conformity": ${opt(conformity)}}"""
+    }
+  }
 
   final case class Result(
       staged: DataFrame,
@@ -24,7 +54,8 @@ object Pipeline {
       lastSalePerAddress: DataFrame,
       top3RecentSales: DataFrame,
       dqPre: Quality.DqMetrics,
-      dqPost: Quality.DqMetrics)
+      dqPost: Quality.DqMetrics,
+      stages: Seq[StageMetrics])
 
   /** S1 — headered CSV scan with schema inference (pipeline.py:41-47), with
     * input order stamped immediately so keep-first dedup stays faithful.
@@ -46,9 +77,10 @@ object Pipeline {
 
   /** pipeline.py:112-160 — the full clean_and_standardize task. Every access
     * is guarded on column presence; missing timestamp/amount synthesize as
-    * all-null (P4).
+    * all-null (P4). `tsRule` is the timestamp rule when an aggregate over the
+    * same rows already decided it; without it the rule costs one job here.
     */
-  def clean(df0: DataFrame): DataFrame = {
+  def clean(df0: DataFrame, tsRule: Option[Timestamps.Rule] = None): DataFrame = {
     var df = Normalize.normalizeNames(df0)
 
     if (df.columns.contains("receiving_address"))
@@ -58,7 +90,7 @@ object Pipeline {
     if (df.columns.contains("location_region"))
       df = df.withColumn("location_region", Normalize.normRegion(col("location_region")))
 
-    df = Timestamps.parseTimestampColumn(df, "timestamp")
+    df = Timestamps.parseTimestampColumn(df, "timestamp", tsRule)
 
     df =
       if (df.columns.contains("amount"))
@@ -111,7 +143,8 @@ object Pipeline {
     * parquet "tables" (our analog of the reference's results.duckdb);
     * `curatedDir` the two CSV exports (pipeline.py:214-215). Gate failures
     * throw QualityGateException AFTER publishing inspection artifacts,
-    * matching pipeline.py:235-261.
+    * matching pipeline.py:235-261. `onStage` sees each stage's metrics as
+    * soon as they are known, so a gate throw still reports the stages run.
     */
   def run(
       spark: SparkSession,
@@ -119,65 +152,84 @@ object Pipeline {
       dataDir: String,
       curatedDir: String,
       minConformityPre: Double = 0.98,
-      minConformityPost: Double = 0.995): Result = {
+      minConformityPost: Double = 0.995,
+      onStage: StageMetrics => Unit = _ => ()): Result = {
 
     new java.io.File(dataDir).mkdirs()
     new java.io.File(curatedDir).mkdirs()
 
+    val stages = Seq.newBuilder[StageMetrics]
+    def report(m: StageMetrics): Unit = { stages += m; onStage(m) }
+    var t = System.nanoTime()
+    def lap(): Long = { val now = System.nanoTime(); val ms = (now - t) / 1000000; t = now; ms }
+
     val raw = ingestCsv(spark, inputCsv)
+    val ingestMs = lap()
 
     // DQ pre-gate runs on the RAW frame — before name normalization, so a
     // CSV with "Timestamp " produces no timestamp rule (pipeline.py:232).
-    val dqPre = Quality.profile(raw.drop(Dedup.IngestIdCol), "pre_clean")
+    // The same pass decides clean's timestamp rule on the raw column that
+    // normalizes to `timestamp` (same rows, same values); with none or
+    // several such columns clean decides it itself.
+    val rawCols = raw.drop(Dedup.IngestIdCol)
+    val tsAggs = rawCols.columns.filter(c => Normalize.normName(c) == "timestamp") match {
+      case Array(c) => Timestamps.ruleAggs(col(c), rawCols.schema(c).dataType)
+      case _        => Nil
+    }
+    val (dqPre, preRow) = Quality.profile(rawCols, "pre_clean", tsAggs)
+    val tsRule = if (tsAggs.isEmpty) None else Some(Timestamps.ruleOf(preRow))
     writeString(s"$dataDir/dq_metrics_pre.json", Quality.toJson(dqPre))
+    report(StageMetrics("ingest", ingestMs, None, Some(dqPre.totalRows), None))
+    report(StageMetrics("dq_pre", lap(), Some(dqPre.totalRows), Some(dqPre.totalRows),
+      Some(dqPre.conformityRate)))
     if (dqPre.conformityRate < minConformityPre) {
       // publish a raw snapshot for inspection, THEN fail (pipeline.py:236-247)
-      raw.drop(Dedup.IngestIdCol).write.mode("overwrite").parquet(s"$dataDir/raw_snapshot")
+      rawCols.write.mode("overwrite").parquet(s"$dataDir/raw_snapshot")
       Quality.gate(dqPre, minConformityPre)
     }
 
-    val staged = clean(raw)
+    val staged = clean(raw, tsRule).cache()
+    try {
+      val cleanMs = lap()
+      val dqPost = Quality.profile(staged.drop(Dedup.IngestIdCol), "post_clean")
+      writeString(s"$dataDir/dq_metrics_post.json", Quality.toJson(dqPost))
+      report(StageMetrics("clean", cleanMs, Some(dqPre.totalRows), Some(dqPost.totalRows), None))
+      report(StageMetrics("dq_post", lap(), Some(dqPost.totalRows), Some(dqPost.totalRows),
+        Some(dqPost.conformityRate)))
 
-    val dqPost = Quality.profile(staged.drop(Dedup.IngestIdCol), "post_clean")
-    writeString(s"$dataDir/dq_metrics_post.json", Quality.toJson(dqPost))
-
-    val result = publish(staged, dataDir, curatedDir, dqPre, dqPost)
-    Quality.gate(dqPost, minConformityPost) // post-gate publishes FIRST, then fails
-    result
+      val (stg, region, last, top3) = publish(staged, dataDir, curatedDir)
+      report(StageMetrics("publish", lap(), Some(dqPost.totalRows), None, None))
+      Quality.gate(dqPost, minConformityPost) // post-gate publishes FIRST, then fails
+      // Result's DataFrames stay valid after the caches go: re-use just
+      // recomputes (or, cheaper, re-reads the parquet published above).
+      Result(stg, region, last, top3, dqPre, dqPost, stages.result())
+    } finally staged.unpersist()
   }
 
-  private def publish(
-      staged: DataFrame,
-      dataDir: String,
-      curatedDir: String,
-      dqPre: Quality.DqMetrics,
-      dqPost: Quality.DqMetrics): Result = {
-    val stg = staged.drop(Dedup.IngestIdCol)
-    // Reuse the cleaned frame across the three downstream queries instead of
-    // recomputing the scan+clean per query (cache is dropped by session end;
-    // at 100 TB this would be a written staging table instead).
-    stg.cache()
-    stg.write.mode("overwrite").parquet(s"$dataDir/stg_transactions")
+  /** Writes every published table from the cached `staged` frame. `region`
+    * and `last` each feed two writes (last via top3), so each is cached on
+    * its first write and released before returning or throwing — `last`
+    * first, so Spark does not re-plan a cached frame over a parent that has
+    * just been uncached.
+    */
+  private def publish(staged: DataFrame, dataDir: String, curatedDir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val stg    = staged.drop(Dedup.IngestIdCol)
+    val region = regionRiskAvg(stg).cache()
+    val last   = lastSalePerAddress(staged).drop(Dedup.IngestIdCol).cache()
+    try {
+      val top3 = top3RecentSales(last)
+      stg.write.mode("overwrite").parquet(s"$dataDir/stg_transactions")
+      region.write.mode("overwrite").parquet(s"$dataDir/region_risk_avg")
+      last.write.mode("overwrite").parquet(s"$dataDir/last_sale_per_address")
+      top3.write.mode("overwrite").parquet(s"$dataDir/top3_recent_sales_by_receiving")
 
-    val region = regionRiskAvg(stg)
-    val last   = lastSalePerAddress(staged).drop(Dedup.IngestIdCol)
-    val top3   = top3RecentSales(last)
-
-    region.write.mode("overwrite").parquet(s"$dataDir/region_risk_avg")
-    last.write.mode("overwrite").parquet(s"$dataDir/last_sale_per_address")
-    top3.write.mode("overwrite").parquet(s"$dataDir/top3_recent_sales_by_receiving")
-
-    // S4 — single-file headered CSV exports with the reference's exact file
-    // names, order baked in (pipeline.py:214-215)
-    Io.writeSingleCsv(region, s"$curatedDir/region_risk_avg.csv")
-    Io.writeSingleCsv(top3, s"$curatedDir/top3_recent_sales_by_receiving.csv")
-
-    // every consumer of the cached frame has executed; release it so
-    // repeated flows in one session (tests, notebooks) don't stack cache.
-    // Result's DataFrames stay valid — re-use just recomputes (or, cheaper,
-    // re-reads the parquet published above).
-    stg.unpersist()
-    Result(stg, region, last, top3, dqPre, dqPost)
+      // S4 — single-file headered CSV exports with the reference's exact file
+      // names, order baked in (pipeline.py:214-215)
+      Io.writeSingleCsv(region, s"$curatedDir/region_risk_avg.csv")
+      Io.writeSingleCsv(top3, s"$curatedDir/top3_recent_sales_by_receiving.csv")
+      (stg, region, last, top3)
+    } finally Seq(last, region).foreach(_.unpersist())
   }
 
   private def writeString(path: String, s: String): Unit =

@@ -6,6 +6,9 @@ import org.apache.spark.sql.{AnalysisException, SparkSession}
   * (/root/reference/flows/pipeline.py:222-268 and Dockerfile:12):
   * env-configured input + thresholds, exit 1 on missing input
   * (pipeline.py:226-229), exit 2 on a conformity-gate breach (README.md:51).
+  * Each finished stage prints one JSON line on stdout (the analog of the
+  * reference's Prefect task logs): stage, wall_ms, rows_in, rows_out,
+  * conformity — a gate breach still prints the stages that ran.
   */
 object PipelineMain {
 
@@ -19,7 +22,7 @@ object PipelineMain {
       minConformityPost: Double): Int =
     try {
       Pipeline.run(spark, inputCsv, dataDir, curatedDir,
-        minConformityPre, minConformityPost)
+        minConformityPre, minConformityPost, m => println(m.toJson))
       0
     } catch {
       case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>

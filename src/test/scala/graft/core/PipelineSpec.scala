@@ -1,13 +1,21 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path}
 
 /** End-to-end flow over a synthesized dirty fraud CSV (FIXTURES.md §A):
   * pass branch, pre-gate fail branch (raw_snapshot then throw), post-gate
-  * publish-before-throw, dirty-header asymmetry, and CLI exit codes
-  * (reference /root/reference/flows/pipeline.py:222-268).
+  * publish-before-throw, dirty-header asymmetry, CLI exit codes
+  * (reference /root/reference/flows/pipeline.py:222-268), per-stage
+  * metrics, cache release on every exit path, and the run's job diet.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -137,4 +145,88 @@ class PipelineSpec extends SparkSpec {
       tmp("d1"), tmp("c1"), 0.98, 0.995) == 1)
     assert(PipelineMain.runCli(spark, in, tmp("d2"), tmp("c2"), 1.01, 0.995) == 2)
   }
+
+  test("stage metrics: five stages in flow order, row counts from the two profiles") {
+    val in = writePassCsv(Files.createTempDirectory("pipe_stages"))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Pipeline.StageMetrics]
+    val res = Pipeline.run(spark, in, tmp("ds"), tmp("cs"), onStage = seen += _)
+    assert(res.stages == seen.toSeq)
+    assert(res.stages.map(_.stage) ==
+      Seq("ingest", "dq_pre", "clean", "dq_post", "publish"))
+    assert(res.stages.forall(_.wallMs >= 0))
+    val by = res.stages.map(m => m.stage -> m).toMap
+    assert(by("ingest").rowsOut.contains(185L))
+    assert(by("clean").rowsIn.contains(185L) && by("clean").rowsOut.contains(180L))
+    assert(by("dq_pre").conformity.contains(res.dqPre.conformityRate))
+    assert(by("dq_post").conformity.contains(1.0))
+    assert(by("publish").toJson ==
+      s"""{"stage": "publish", "wall_ms": ${by("publish").wallMs}, "rows_in": 180, """ +
+        """"rows_out": null, "conformity": null}""")
+  }
+
+  test("every pipeline cache is released on pass, post-gate throw and failed publish") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val in = writePassCsv(Files.createTempDirectory("pipe_leak"))
+
+    Pipeline.run(spark, in, tmp("dl1"), tmp("cl1"))
+    assert(sc.getPersistentRDDs.size == before, "pass run")
+
+    intercept[Quality.QualityGateException] {
+      Pipeline.run(spark, in, tmp("dl2"), tmp("cl2"), minConformityPost = 1.01)
+    }
+    assert(sc.getPersistentRDDs.size == before, "post-gate throw")
+
+    // curatedDir is a regular file: the CSV exports fail after the parquet
+    // writes have built every cache
+    val notADir = Files.createTempFile("pipe_leak", ".file").toString
+    intercept[Exception](Pipeline.run(spark, in, tmp("dl3"), notADir))
+    assert(sc.getPersistentRDDs.size == before, "failed publish")
+  }
+
+  test("job diet: each stage runs once and no publish write rescans the CSV") {
+    val in = writePassCsv(Files.createTempDirectory("pipe_jobs"))
+    Pipeline.run(spark, in, tmp("dw"), tmp("cw")) // warm: first-run planning noise
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    object Aqe extends AdaptiveSparkPlanHelper
+    val csvWrites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val qeListener = new QueryExecutionListener {
+      // a write's executed plan is AQE-wrapped whole; the helper walks
+      // query stages but not into cached relations' build plans
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Aqe.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach { w =>
+          writes.incrementAndGet()
+          val csvScans = Aqe.collect(w.child) {
+            case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
+          }
+          if (csvScans.nonEmpty) csvWrites.add(w.cmd.toString.take(200))
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      Pipeline.run(spark, in, tmp("dj"), tmp("cj"))
+      ListenerBusDrain(sc)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+    assert(writes.get == 6, "4 parquet tables + 2 CSV exports")
+    assert(csvWrites.isEmpty, s"publish writes that rescan the CSV: $csvWrites")
+    assert(jobs.get <= MaxJobs, s"${jobs.get} jobs for one pass run")
+  }
+
+  /** Jobs of one warm pass run on the 185-row CSV: schema inference, the
+    * two DQ aggregates (the second builds the cleaned cache), and the six
+    * publish writes, each AQE stage submitted as its own job.
+    */
+  private val MaxJobs = 20
 }
